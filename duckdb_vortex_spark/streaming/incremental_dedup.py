@@ -24,13 +24,16 @@ micro-batch (bounded); Spark broadcasts it when small.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.vortex import FILE_SUFFIX  # noqa: F401  (store is a vortex dataset)
+from .sinks import (
+    overlapped_batch_writes,
+    overwrite_batch_atomic,
+    read_state,
+    start_available_now,
+)
 
 
 def fingerprint(text_col: str = "text"):
@@ -52,15 +55,12 @@ def incremental_dedup_stream(
     """Start the ingest pipeline on a streaming DataFrame; returns the
     StreamingQuery (caller awaits). Output dataset: survivors only,
     first occurrence wins across the whole stream history."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, out_dir, store_dir, text_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: process_batch(
+            batch_df, batch_id, out_dir, store_dir, text_col
+        ),
     )
 
 
@@ -91,32 +91,18 @@ def process_batch(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # Anti-join ONLY against batches strictly earlier than this one.
-    # A retried batch may have half-written its own store dir before
-    # the checkpoint committed; globbing batch-* would see those
-    # stale fingerprints, classify every row as seen, and rewrite
-    # both dirs EMPTY — permanently dropping the documents. Listing
-    # ids < batch_id makes the replay read exactly what the first
-    # attempt read.
-    from .sinks import batch_dirs
-
-    prior = batch_dirs(store_dir, batch_id)
     # checkpoint: fp feeds both the history probe and the two writes —
     # without a barrier each consumer re-runs the first-wins window
-    # (and every F.broadcast build is its own query execution — r16)
+    # (and every F.broadcast build is its own query execution)
     fp = fp.localCheckpoint(eager=False)
-    if prior:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        seen = (
-            spark_.read.format("vortex")
-            # known store schema (xxhash64 → bigint): skips the
-            # footer-merging bind step per batch (r16)
-            .schema(StructType([StructField("__fp", LongType(), True)]))
-            .option("paths", json.dumps(prior))
-            .load()
-            .select("__fp")
-        )
+    # Anti-join ONLY against batches strictly earlier than this one.
+    # A retried batch may have half-written its own store dir before
+    # the checkpoint committed; reading it would see those stale
+    # fingerprints, classify every row as seen, and rewrite both dirs
+    # EMPTY — permanently dropping the documents. Reading state before
+    # batch_id makes the replay read exactly what the first attempt read.
+    seen = read_state(spark_, store_dir, batch_id, fp.select("__fp").schema)
+    if seen is not None:
         # r16 (guide §3.1): the batch side is bounded, the store is the
         # corpus — broadcast the batch fingerprints INTO the store scan
         # (map-side semi; the store is never exchanged), then anti-join
@@ -128,7 +114,6 @@ def process_batch(
         fresh = fp.join(F.broadcast(matched), "__fp", "left_anti")
     else:  # first batch: store empty — dedup is in-batch only
         fresh = fp
-    from .sinks import overlapped_batch_writes, overwrite_batch_atomic
 
     # r16 (guide §2.6): the two terminal writes are independent of each
     # other (different stores, both atomic per batch) — overlap them;

@@ -63,12 +63,9 @@ overwrites its own, so replay is idempotent (same contract as
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
@@ -80,19 +77,113 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_table,
 )
-from .sinks import STATE_FILES, land_session_dataset, overlapped_batch_writes
-from .sinks import batch_dirs as _batch_dirs
+from .sinks import (
+    STATE_FILES,
+    land_id_ordered_batches,
+    overlapped_batch_writes,
+    read_state,
+    start_available_now,
+)
 from .sinks import overwrite_batch_atomic as _overwrite_batch
 
 
-def _nullable(schema):
-    """All-nullable copy of ``schema`` — store reads return nullable
-    columns, and passing the known schema skips the DataSource's
-    footer-merging bind step on every per-batch state read (r16)."""
-    from pyspark.sql.types import StructField, StructType
+def neardup_dropped(
+    sig: DataFrame,
+    buckets: DataFrame,
+    index: DataFrame | None,
+    history: DataFrame | None,
+    threshold: float,
+    n: int,
+    max_bucket: int,
+) -> DataFrame:
+    """The near-dup gate: ids of the batch documents that have a
+    verified near-duplicate among EARLIER documents — landed ones, or
+    same-batch ones with a smaller id.
 
-    return StructType(
-        [StructField(f.name, f.dataType, True) for f in schema.fields]
+    ``sig`` (id, sh, ...) and ``buckets`` (band, h, id) are the batch's
+    MinHash signatures and LSH band buckets; ``index`` is the prior LSH
+    index (band, h, id) and ``history`` the prior landed documents (id,
+    text, ...), each None before anything has landed. Candidates are
+    the in-batch bucket pairs ∪ batch buckets ⋈ index, under the
+    hot-bucket cap; each is verified by exact shingle Jaccard >=
+    ``threshold``. Returns (id) rows, lazily."""
+    # Hot-bucket guard over history + this batch, applied UNIFORMLY to
+    # both the in-batch self-join and the history join (an asymmetric
+    # cap would make in-batch pair work unbounded AND make the answer
+    # depend on which join a pair happened to arrive through). The
+    # count is point-in-time by necessity — a stream cannot know a
+    # bucket's final size — so above the cap the guarantee degrades
+    # from "equals batch mode" to "bounded work" (see module
+    # docstring); below it (the designed regime: a bucket past
+    # max_bucket is a stop-shingle artifact) invariance is exact.
+    bkeys = buckets.select("band", "h")
+    if index is not None:
+        # only the BATCH's bucket keys are consulted below, so prune the
+        # index scan to them map-side (broadcast semi) before counting:
+        # the hot-bucket aggregate's exchange is then bounded by the
+        # batch's buckets, not every (band, h) ever landed. Counts for
+        # the surviving keys are unchanged.
+        hist = index.select("band", "h").join(
+            F.broadcast(bkeys), ["band", "h"], "left_semi"
+        ).unionByName(bkeys)
+    else:
+        hist = bkeys
+    ok = (
+        hist.groupBy("band", "h")
+        .agg(F.count("*").alias("bn"))
+        .filter(F.col("bn") <= max_bucket)
+        .select("band", "h")
+    )
+    # buck_ok feeds three consumers (a, b, cross) and cand two more, and
+    # every F.broadcast build is its own query execution: without these
+    # barriers each build re-computes the whole subtree below it,
+    # including the hot-bucket aggregate over the index
+    buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(
+        eager=False
+    )
+    # in-batch candidates: the smaller id is the earlier side
+    a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
+    b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
+    cand = (
+        a.join(F.broadcast(b), ["band", "h"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    if index is not None:
+        # index streams map-side; the bounded batch buckets broadcast
+        cross = (
+            index.withColumnRenamed("id", "doc_a")
+            .join(F.broadcast(buck_ok), ["band", "h"])
+            .select("doc_a", F.col("id").alias("doc_b"))
+        )
+        cand = cand.unionByName(cross)
+    cand = cand.distinct().localCheckpoint(eager=False)
+
+    # exact verification — old-side shingles come from the landed
+    # documents, pruned to candidate ids BEFORE re-shingling (semi join
+    # on the sort key → zone-map point reads at scale)
+    new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    old_in_batch = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    if history is not None:
+        old_docs = history.join(
+            F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
+            "id",
+            "left_semi",
+        )
+        old_sh = (
+            shingle_table(old_docs, "text", "id", n)
+            .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
+            .unionByName(old_in_batch)
+        )
+    else:
+        old_sh = old_in_batch
+    return (
+        _with_jaccard(
+            old_sh.join(F.broadcast(cand), "doc_a").join(F.broadcast(new_sh), "doc_b")
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(F.col("doc_b").alias("id"))
+        .distinct()
     )
 
 
@@ -121,12 +212,11 @@ def neardup_process_batch(
             .repartitionByRange(STATE_FILES, "id")
             .sortWithinPartitions("id")
         )
-        # r16 write overlap (guide §2.6, same contract argument as the
-        # integrated chain): the raw and index writes are independent of
-        # the gate compute — state reads list strictly-earlier batch dirs
-        # only and a retry overwrites any partial write set atomically per
-        # store — so they run on the shared write pool and are joined
-        # before the batch returns; only their latency stops serializing.
+        # the raw and index writes are independent of the gate compute —
+        # state reads list strictly-earlier batch dirs only and a retry
+        # overwrites any partial write set atomically per store — so
+        # they run on the shared write pool and are joined before the
+        # batch returns; only their latency stops serializing.
         bw.submit(
             _overwrite_batch, raw, raw_dir, batch_id, max_files=None,
             label=f"neardup b{batch_id}: raw (write)",
@@ -135,8 +225,7 @@ def neardup_process_batch(
         # localCheckpoint, not persist: cuts the signature expression
         # tree out of every downstream plan — persist keeps the full
         # logical plan and Catalyst re-analyzes the accumulated chain per
-        # action (measured on the integrated pipeline: 117 -> 48 s; see
-        # incremental_pipeline.py docstring for the rule).
+        # action (see the incremental_pipeline docstring for the rule).
         sig = minhash_signatures(
             batch_df, text_col, id_col, num_hashes, n, engine="arrow"
         ).localCheckpoint(eager=False)
@@ -144,112 +233,19 @@ def neardup_process_batch(
         # the index gets ALL of the batch's buckets regardless of gate
         # outcomes, so its write depends only on `buckets` — submit it
         # here to overlap the whole candidate/verify section below
+        index = buckets.select("band", "h", "id")
         bw.submit(
-            _overwrite_batch, buckets.select("band", "h", "id"), index_dir,
-            batch_id, label=f"neardup b{batch_id}: index (write)",
+            _overwrite_batch, index, index_dir, batch_id,
+            label=f"neardup b{batch_id}: index (write)",
         )
-
-        prior_index = _batch_dirs(index_dir, batch_id)
-        idx = (
-            spark_.read.format("vortex")
-            .schema(_nullable(buckets.select("band", "h", "id").schema))
-            .option("paths", json.dumps(prior_index))
-            .load()
-            if prior_index
-            else None
-        )
-        # Hot-bucket guard over history + this batch, applied UNIFORMLY to
-        # both the in-batch self-join and the history join (an asymmetric
-        # cap would make in-batch pair work unbounded AND make the answer
-        # depend on which join a pair happened to arrive through). The
-        # count is point-in-time by necessity — a stream cannot know a
-        # bucket's final size — so above the cap the guarantee degrades
-        # from "equals batch mode" to "bounded work" (see module
-        # docstring); below it (the designed regime: a bucket past
-        # max_bucket is a stop-shingle artifact) invariance is exact.
-        bkeys = buckets.select("band", "h")
-        if idx is not None:
-            # r16 (guide §2.3/§3.1, same change as the integrated chain):
-            # only the BATCH's bucket keys are consulted below — prune the
-            # index scan to them map-side (broadcast semi) before counting
-            # so the hot-bucket aggregate's exchange is bounded by the
-            # batch's buckets, not every (band, h) ever landed; counts for
-            # surviving keys are unchanged.
-            hist = idx.select("band", "h").join(
-                F.broadcast(bkeys), ["band", "h"], "left_semi"
-            ).unionByName(bkeys)
-        else:
-            hist = bkeys
-        ok = (
-            hist.groupBy("band", "h")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") <= max_bucket)
-            .select("band", "h")
-        )
-        # buck_ok feeds three consumers and each F.broadcast build is its
-        # own query execution — checkpoint so the subtree (including the
-        # hot-bucket aggregate) is computed once (r16, measured on the
-        # integrated chain as escalating per-build recompute)
-        buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(
-            eager=False
-        )
-        if idx is not None:
-            # index streams map-side; bounded batch buckets broadcast
-            cross = (
-                idx.withColumnRenamed("id", "doc_a")
-                .join(F.broadcast(buck_ok), ["band", "h"])
-                .select("doc_a", F.col("id").alias("doc_b"))
-            )
-        else:
-            cross = None
-
-        # in-batch candidates (smaller id is the earlier side); the inner
-        # per-branch distincts collapsed into the single final distinct
-        # (identical rows, two fewer exchanges — r16)
-        a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
-        b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
-        within = (
-            a.join(F.broadcast(b), ["band", "h"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
-        cand = (
-            within.unionByName(cross) if cross is not None else within
-        ).distinct().localCheckpoint(eager=False)
-
-        # exact verification — old-side shingles come from the landed raw
-        # batches, pruned to candidate ids BEFORE re-shingling (semi join
-        # on the sort key → zone-map point reads at scale)
-        new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        old_in_batch = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        prior_raw = _batch_dirs(raw_dir, batch_id)
-        if prior_raw:
-            old_docs = (
-                spark_.read.format("vortex")
-                .schema(_nullable(raw.schema))
-                .option("paths", json.dumps(prior_raw))
-                .load()
-                .join(
-                    F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
-                    "id",
-                    "left_semi",
-                )
-            )
-            old_sh = (
-                shingle_table(old_docs, "text", "id", n)
-                .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-                .unionByName(old_in_batch)
-            )
-        else:
-            old_sh = old_in_batch
-        dup_ids = (
-            _with_jaccard(
-                old_sh.join(F.broadcast(cand), "doc_a")
-                .join(F.broadcast(new_sh), "doc_b")
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select(F.col("doc_b").alias("id"))
-            .distinct()
+        dup_ids = neardup_dropped(
+            sig,
+            buckets,
+            read_state(spark_, index_dir, batch_id, index.schema),
+            read_state(spark_, raw_dir, batch_id, raw.schema),
+            threshold,
+            n,
+            max_bucket,
         )
         manifest = (
             sig.select("id")
@@ -274,17 +270,12 @@ def incremental_neardup_stream(
     """Start the near-dup ingest on a streaming DataFrame; returns the
     StreamingQuery (caller awaits). Manifest across all batches =
     batch-mode MinHash dedup of the whole history, first-wins."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_process_batch(
+    return start_available_now(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: neardup_process_batch(
             batch_df, batch_id, raw_dir, index_dir, manifest_dir, **kwargs
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -328,31 +319,12 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.vortex import register
 
     register(spark)
-    docs = load(spark, sf_dir, "documents")
-    batched = docs.withColumn(
-        "__b", F.ntile(3).over(Window.orderBy("doc_id"))
-    ).persist()
-    root = tempfile.mkdtemp(prefix="dvs_neardup_")
-    raw_d, idx_d, man_d = (os.path.join(root, d) for d in ("raw", "idx", "man"))
-    try:
-        for i in (1, 2, 3):
-            neardup_process_batch(
-                batched.filter(F.col("__b") == i).drop("__b"),
-                i,
-                raw_d,
-                idx_d,
-                man_d,
-            )
-        out = (
-            spark.read.format("vortex")
-            .option("paths", json.dumps(_batch_dirs(man_d, 10**9)))
-            .load()
-            .select("doc_id", "keep")
-        )
-        # Land executor-side before the scratch dir disappears (the
-        # driver may collect lazily after this function returns) —
-        # never through a driver collect (VERDICT r8 wrong #1).
-        return land_session_dataset(out, "neardup-manifest")
-    finally:
-        batched.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
+
+    def run(batches, root):
+        dirs = [os.path.join(root, d) for d in ("raw", "idx", "man")]
+        for i, batch in batches:
+            neardup_process_batch(batch, i, *dirs)
+
+    return land_id_ordered_batches(
+        load(spark, sf_dir, "documents"), "doc_id", "neardup", ("doc_id", "keep"), run
+    )

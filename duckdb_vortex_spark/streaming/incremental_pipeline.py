@@ -22,8 +22,9 @@ Per micro-batch (documents already joined to their embeddings):
    candidates = in-batch (smaller id earlier) ∪ buckets ⋈ the
    persistent LSH index (which holds every doc that REACHED this gate
    — prior s1 sets); hot-bucket cap applied uniformly from
-   point-in-time history+batch counts (same degradation contract as
-   `incremental_neardup`); exact shingle-Jaccard verify re-shingles
+   point-in-time history+batch counts (the standalone gate's kernel,
+   `incremental_neardup.neardup_dropped`, with its degradation
+   contract); exact shingle-Jaccard verify re-shingles
    ONLY candidate old docs, fetched from the SHARED raw store by id
    semi-join (zone-map point reads — the store is id-sorted per
    batch). Survivors s2; ALL s1 buckets append to the index;
@@ -33,7 +34,8 @@ Per micro-batch (documents already joined to their embeddings):
    candidates = earlier same-batch same-cluster rows ∪ the persistent
    cluster-SORTED IVF index rows in the batch's probed clusters only
    (holds every doc that reached this gate — prior s2 sets); exact
-   cosine >= threshold. Survivors s3; ALL s2 assignments append
+   cosine >= threshold (`incremental_semdedup.same_cluster_dropped`,
+   the standalone gate's kernel). Survivors s3; ALL s2 assignments append
    cluster-sorted;
 4. manifest row per batch document: first failing gate
    (stage ∈ exact | near_dup | semantic | kept).
@@ -82,10 +84,7 @@ nothing here.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -94,52 +93,22 @@ from ..catalog import load, query
 from ..operators.dedup import (
     _DUCK_TOKS,
     _duck_shingles,
-    _with_jaccard,
     band_buckets,
     minhash_signatures,
-    shingle_table,
 )
-from ..operators.similarity import _dot, _sql_cos, ivf_assign, sample_centroids
+from ..operators.similarity import _sql_cos, ivf_assign, sample_centroids
 from .incremental_dedup import fingerprint
-from .sinks import batch_dirs as _batch_dirs
+from .incremental_neardup import neardup_dropped
+from .incremental_semdedup import same_cluster_dropped
 from .sinks import overwrite_batch_atomic as _overwrite_batch
 from .sinks import (
     STATE_FILES,
-    land_session_dataset,
+    land_id_ordered_batches,
     overlapped_batch_writes,
-    state_dirs,
+    read_state,
+    start_available_now,
+    warn_once,
 )
-
-
-def _read_batches(
-    spark, base: str, before: int, schema=None, **options
-) -> DataFrame | None:
-    """State visible to batch ``before``: tiered listing (compaction
-    segments + strictly-earlier uncompacted batch dirs), so every store
-    the chain maintains can be incrementally compacted BETWEEN
-    micro-batches (`sinks.compact_dataset_incremental`) without
-    breaking the retry contract — see `sinks.state_dirs` for the
-    invariant.
-
-    ``schema`` (r16): the chain KNOWS each store's schema (it wrote
-    it — the store is the prior batches' frame), so passing it skips
-    the DataSource's bind step (a Python planning worker merging every
-    part file's footer) on every per-batch state read."""
-    dirs = state_dirs(base, before)
-    if not dirs:
-        return None
-    r = spark.read.format("vortex").option("paths", json.dumps(dirs))
-    if schema is not None:
-        from pyspark.sql.types import StructField, StructType
-
-        r = r.schema(
-            StructType(
-                [StructField(f.name, f.dataType, True) for f in schema.fields]
-            )
-        )
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load()
 
 
 # Sort keys for each per-batch state store the chain reads back —
@@ -239,7 +208,7 @@ def ingest_process_batch(
         try:
             spark_.sparkContext.setJobDescription(f"chain b{batch_id}: {stage}")
         except Exception:
-            pass
+            warn_once("labelling the chain's Spark jobs")
 
     with overlapped_batch_writes(spark_) as bw:
         # 0. land the raw batch into the SHARED store (id-sorted: stage-2
@@ -286,7 +255,7 @@ def ingest_process_batch(
         fp = fp.withColumn(
             "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy("id"))
         ).localCheckpoint(eager=False)
-        seen_raw = _read_batches(spark_, raw_d, batch_id, schema=rows.schema)
+        seen_raw = read_state(spark_, raw_d, batch_id, rows.schema)
         seen = seen_raw.select("fp") if seen_raw is not None else None
         if seen is not None:
             # r16 (guide §3.1): checkpointed frames carry NO size stats, so
@@ -318,81 +287,15 @@ def ingest_process_batch(
         # 2. NEAR-DUP gate over s1 ---------------------------------------------
         sig = minhash_signatures(s1, "text", "id", num_hashes, n, engine="jvm").localCheckpoint(eager=False)
         buckets = band_buckets(sig, num_hashes, rows_per_band).localCheckpoint(eager=False)
-        idx = _read_batches(
-            spark_, lsh_d, batch_id, schema=buckets.select("band", "h", "id").schema
-        )
-        bkeys = buckets.select("band", "h")
-        if idx is not None:
-            # r16 (guide §2.3/§3.1): only the BATCH's bucket keys are ever
-            # consulted by the join below, so prune the index scan to them
-            # map-side (broadcast semi) before counting — the hot-bucket
-            # aggregate's exchange is then bounded by the batch's buckets
-            # instead of every (band, h) ever landed. Counts for the
-            # surviving keys are unchanged (the semi keeps every
-            # occurrence of a kept key).
-            hist_bh = idx.select("band", "h").join(
-                F.broadcast(bkeys), ["band", "h"], "left_semi"
-            ).unionByName(bkeys)
-        else:
-            hist_bh = bkeys
-        ok = (
-            hist_bh.groupBy("band", "h")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") <= max_bucket)
-            .select("band", "h")
-        )
-        # r16: buck_ok feeds THREE consumers (a, b, cross) and cand feeds
-        # two more — and every F.broadcast() build is its own query
-        # execution, so without a materialization barrier each build
-        # RE-COMPUTES the whole gate subtree below it (including the
-        # hot-bucket aggregate over the index): measured as six escalating
-        # 0.6→2.0 s broadcast-build jobs per batch at sf0.01. Checkpoint
-        # the two shared frames so each is computed once.
-        buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(
-            eager=False
-        )
-        a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
-        b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
-        cand = (
-            a.join(F.broadcast(b), ["band", "h"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
-        if idx is not None:
-            # index streams map-side; the bounded batch buckets broadcast
-            cross = (
-                idx.withColumnRenamed("id", "doc_a")
-                .join(F.broadcast(buck_ok), ["band", "h"])
-                .select("doc_a", F.col("id").alias("doc_b"))
-            )
-            cand = cand.unionByName(cross)
-        cand = cand.distinct().localCheckpoint(eager=False)
-        new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        old_in_batch = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        prior_raw = seen_raw
-        if prior_raw is not None:
-            old_docs = prior_raw.join(
-                F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
-                "id",
-                "left_semi",
-            )
-            old_sh = (
-                shingle_table(old_docs, "text", "id", n)
-                .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-                .unionByName(old_in_batch)
-            )
-        else:
-            old_sh = old_in_batch
-        near_dropped = (
-            _with_jaccard(
-                old_sh.join(F.broadcast(cand), "doc_a")
-                .join(F.broadcast(new_sh), "doc_b")
-            )
-            .filter(F.col("jaccard") >= near_threshold)
-            .select(F.col("doc_b").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        near_dropped = neardup_dropped(
+            sig,
+            buckets,
+            read_state(spark_, lsh_d, batch_id, buckets.select("band", "h", "id").schema),
+            seen_raw,
+            near_threshold,
+            n,
+            max_bucket,
+        ).localCheckpoint(eager=False)
         # single consumer (asg, checkpointed below): no checkpoint —
         # each localCheckpoint call costs ~0.4 s of driver-side
         # planning/AQE stage execution per batch (r16 cProfile)
@@ -410,43 +313,11 @@ def ingest_process_batch(
             .localCheckpoint(eager=False)
         )
         _label("probed clusters")
-        probed = sorted(
-            r["cluster_id"] for r in asg.select("cluster_id").distinct().collect()
-        )
-        new_side = asg.select(
-            "cluster_id",
-            F.col("id").alias("id_b"),
-            F.col("vec").alias("vec_b"),
-            F.col("vnorm").alias("n_b"),
-        )
-        old_side = asg.select(
-            "cluster_id",
-            F.col("id").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            F.col("vnorm").alias("n_a"),
-        )
-        landed = _read_batches(
-            spark_, ivf_d, batch_id, schema=asg.schema, pushdown="true"
-        )
-        if landed is not None:
-            landed = landed.filter(F.col("cluster_id").isin(probed)).select(
-                "cluster_id",
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("vec_a"),
-                F.col("vnorm").alias("n_a"),
-            )
-            old_side = landed.unionByName(old_side)
-        sem_dropped = (
-            # batch side bounded → broadcast; history IVF rows stream.
-            # Single consumer (the manifest join): no checkpoint (see s2).
-            old_side.join(F.broadcast(new_side), "cluster_id")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                (_dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")))
-                >= sem_threshold
-            )
-            .select(F.col("id_b").alias("id"))
-            .distinct()
+        # single consumer (the manifest join): no checkpoint (see s2)
+        sem_dropped = same_cluster_dropped(
+            asg,
+            read_state(spark_, ivf_d, batch_id, asg.schema, pushdown="true"),
+            sem_threshold,
         )
         bw.submit(
             _overwrite_batch,
@@ -519,12 +390,7 @@ def incremental_ingest_stream(
             )
         ingest_process_batch(batch_df, batch_id, centroids, root, **kwargs)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream_df, checkpoint, sink)
 
 
 # ---------------------------------------------------------------------------
@@ -624,26 +490,14 @@ def stream_incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> Data
     # micro-batch — cache the 16-row sample instead of re-running the
     # sampling query each batch
     centroids = sample_centroids(emb, 16).persist()
-    batched = corpus.withColumn(
-        "__b", F.ntile(3).over(Window.orderBy("doc_id"))
-    ).persist()
-    root = tempfile.mkdtemp(prefix="dvs_ingest_")
+
+    def run(batches, root):
+        for i, batch in batches:
+            ingest_process_batch(batch, i, centroids, root)
+
     try:
-        for i in (1, 2, 3):
-            ingest_process_batch(
-                batched.filter(F.col("__b") == i).drop("__b"), i, centroids, root
-            )
-        out = (
-            spark.read.format("vortex")
-            .option("paths", json.dumps(_batch_dirs(os.path.join(root, "man"), 10**9)))
-            .load()
-            .select("doc_id", "source", "stage", "is_kept")
+        return land_id_ordered_batches(
+            corpus, "doc_id", "ingest", ("doc_id", "source", "stage", "is_kept"), run
         )
-        # Land executor-side before the scratch dir disappears (the
-        # driver may collect lazily after this function returns) —
-        # never through a driver collect (VERDICT r8 wrong #1).
-        return land_session_dataset(out, "ingest-manifest")
     finally:
-        batched.unpersist()
         centroids.unpersist()
-        shutil.rmtree(root, ignore_errors=True)

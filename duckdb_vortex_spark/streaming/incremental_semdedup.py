@@ -42,12 +42,9 @@ would test nothing, same reasoning as `dedup_semantic_cluster`'s 0.30.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
@@ -57,9 +54,61 @@ from ..operators.similarity import (
     ivf_assign,
     sample_centroids,
 )
-from .incremental_neardup import _batch_dirs, _nullable
-from .sinks import STATE_FILES, land_session_dataset
-from .sinks import overlapped_batch_writes, overwrite_batch_atomic
+from .sinks import (
+    STATE_FILES,
+    land_id_ordered_batches,
+    overlapped_batch_writes,
+    overwrite_batch_atomic,
+    read_state,
+    start_available_now,
+)
+
+
+def same_cluster_dropped(
+    asg: DataFrame, index: DataFrame | None, threshold: float
+) -> DataFrame:
+    """The semantic gate: ids of the batch vectors whose cosine with an
+    EARLIER vector in the same cluster reaches ``threshold``.
+
+    ``asg`` (cluster_id, id, vec, vnorm) is the batch's 1-probe
+    assignment; ``index`` is the prior IVF index read (same columns,
+    cluster-sorted; None before anything has landed), of which only
+    the clusters the batch probes are scanned. Earlier means a landed
+    row, or a same-batch row with a smaller id. Returns (id) rows,
+    lazily; the probed-cluster list is one bounded collect."""
+    # bounded collect: <= n_clusters ints, reused as a LITERAL filter so
+    # the prior-index scan zone-map-prunes to the probed clusters' chunks
+    probed = sorted(r["cluster_id"] for r in asg.select("cluster_id").distinct().collect())
+
+    def side(df, s):
+        return df.select(
+            "cluster_id",
+            F.col("id").alias(f"id_{s}"),
+            F.col("vec").alias(f"vec_{s}"),
+            F.col("vnorm").alias(f"n_{s}"),
+        )
+
+    old_side = side(asg, "a")
+    if index is not None:
+        old_side = side(index.filter(F.col("cluster_id").isin(probed)), "a").unionByName(
+            old_side
+        )
+    # earlier = strictly smaller id for same-batch rows; landed rows are
+    # always earlier, and their ids are < every new id only under global
+    # id-ordered ingest — the general guard (id_a < id_b) is correct for
+    # BOTH cases because ids are unique across the stream.
+    return (
+        # batch side bounded → broadcast; the landed index rows
+        # (history-sized) stream map-side
+        old_side.join(F.broadcast(side(asg, "b")), "cluster_id")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(
+            (_dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")))
+            >= threshold
+        )
+        .select(F.col("id_b").alias("id"))
+        .distinct()
+    )
 
 
 def semdedup_process_batch(
@@ -86,20 +135,20 @@ def semdedup_process_batch(
         ).localCheckpoint(eager=False)  # lineage cut, not persist — see
         # incremental_pipeline.py (Catalyst re-analysis of accumulated
         # batch chains dominates otherwise)
-
-        # bounded collect: <= n_clusters ints, reused as a LITERAL filter so
-        # the prior-index scan zone-map-prunes to the probed clusters' chunks
-        probed = sorted(r["cluster_id"] for r in asg.select("cluster_id").distinct().collect())
-
-        # r16 write overlap (guide §2.6, same contract argument as the
-        # other chains): the index write depends only on `asg` (already
-        # materialized by the collect above) and is atomic per
-        # (store, batch); `_batch_dirs` lists strictly-earlier batch ids
-        # only, so this batch's own concurrent landing is invisible to
-        # the `prior` read below. Submitting here overlaps the write's
-        # scheduler + task-launch latency with the pair-scoring gate.
-        # cluster-sorted append: range partition + in-file sort => tight
-        # cluster_id zone maps, so future batches' candidate scans prune
+        # fresh single-consumption load with a static In filter over the
+        # cluster-SORTED index → opt-in zone-map pruning reads only the
+        # probed clusters' chunks (safe: no relation reuse)
+        dup_ids = same_cluster_dropped(
+            asg,
+            read_state(spark_, index_dir, batch_id, asg.schema, pushdown="true"),
+            threshold,
+        )
+        # the index write depends only on `asg` (materialized by the
+        # probed-cluster collect) and is atomic per (store, batch); state
+        # reads list strictly-earlier batch ids only, so this batch's own
+        # concurrent landing is invisible to them. Cluster-sorted append:
+        # range partition + in-file sort => tight cluster_id zone maps,
+        # so future batches' candidate scans prune
         bw.submit(
             overwrite_batch_atomic,
             asg.repartitionByRange(
@@ -109,63 +158,6 @@ def semdedup_process_batch(
             batch_id,
             max_files=None,
             label=f"semdedup b{batch_id}: index (write)",
-        )
-
-        new_side = asg.select(
-            F.col("cluster_id"),
-            F.col("id").alias("id_b"),
-            F.col("vec").alias("vec_b"),
-            F.col("vnorm").alias("n_b"),
-        )
-        old_in_batch = asg.select(
-            F.col("cluster_id"),
-            F.col("id").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            F.col("vnorm").alias("n_a"),
-        )
-        prior = _batch_dirs(index_dir, batch_id)
-        if prior:
-            landed = (
-                spark_.read.format("vortex")
-                # fresh single-consumption load with a static In filter over
-                # the cluster-SORTED index → opt-in zone-map pruning reads
-                # only the probed clusters' chunks (safe: no relation reuse).
-                # Known store schema: skips the footer-merging bind (r16).
-                .schema(_nullable(asg.schema))
-                .option("pushdown", "true")
-                .option("paths", json.dumps(prior))
-                .load()
-                .filter(F.col("cluster_id").isin(probed))
-                .select(
-                    "cluster_id",
-                    F.col("id").alias("id_a"),
-                    F.col("vec").alias("vec_a"),
-                    F.col("vnorm").alias("n_a"),
-                )
-            )
-            old_side = landed.unionByName(old_in_batch)
-        else:
-            old_side = old_in_batch
-        # earlier = strictly smaller id for same-batch rows; landed rows are
-        # always earlier, and their ids are < every new id only under global
-        # id-ordered ingest — the general guard (id_a < id_b) is correct for
-        # BOTH cases because ids are unique across the stream.
-        pairs = (
-            # r16 (guide §3.1): batch side bounded → broadcast; the landed
-            # index rows (history-sized) stream map-side instead of the
-            # stats-less checkpoint frames falling to sort-merge
-            old_side.join(F.broadcast(new_side), "cluster_id")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_b",
-                (
-                    _dot(F.col("vec_a"), F.col("vec_b"))
-                    / (F.col("n_a") * F.col("n_b"))
-                ).alias("cos"),
-            )
-        )
-        dup_ids = (
-            pairs.filter(F.col("cos") >= threshold).select(F.col("id_b").alias("id")).distinct()
         )
         manifest = (
             asg.select("id")
@@ -191,17 +183,12 @@ def incremental_semdedup_stream(
     static (offline-trained) centroid codebook; returns the
     StreamingQuery. Manifest across all batches = batch-mode
     same-cluster SemDeDup of the whole history, first-wins."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        semdedup_process_batch(
+    return start_available_now(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: semdedup_process_batch(
             batch_df, batch_id, centroids, index_dir, manifest_dir, **kwargs
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -263,33 +250,15 @@ def stream_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # persist: ivf_assign's literal path collects this frame once per
     # micro-batch — cache the 16-row sample instead of re-running the
-    # sampling query each batch (r16)
+    # sampling query each batch
     centroids = sample_centroids(emb, 16).persist()
-    batched = emb.withColumn(
-        "__b", F.ntile(3).over(Window.orderBy("vec_id"))
-    ).persist()
-    root = tempfile.mkdtemp(prefix="dvs_semdedup_")
-    idx_d, man_d = (os.path.join(root, d) for d in ("idx", "man"))
+
+    def run(batches, root):
+        idx_d, man_d = (os.path.join(root, d) for d in ("idx", "man"))
+        for i, batch in batches:
+            semdedup_process_batch(batch, i, centroids, idx_d, man_d)
+
     try:
-        for i in (1, 2, 3):
-            semdedup_process_batch(
-                batched.filter(F.col("__b") == i).drop("__b"),
-                i,
-                centroids,
-                idx_d,
-                man_d,
-            )
-        out = (
-            spark.read.format("vortex")
-            .option("paths", json.dumps(_batch_dirs(man_d, 10**9)))
-            .load()
-            .select("vec_id", "keep")
-        )
-        # Land executor-side before the scratch dir disappears (the
-        # driver may collect lazily after this function returns) —
-        # never through a driver collect (VERDICT r8 wrong #1).
-        return land_session_dataset(out, "semdedup-manifest")
+        return land_id_ordered_batches(emb, "vec_id", "semdedup", ("vec_id", "keep"), run)
     finally:
-        batched.unpersist()
         centroids.unpersist()
-        shutil.rmtree(root, ignore_errors=True)

@@ -19,19 +19,42 @@ chunk zone maps matter more than ingest latency.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import glob as globmod
 import json as _json
+import logging
 import math as _math
 import os
 import shutil
+import tempfile
 import threading as _threading
 import time as _time
 from concurrent.futures import ThreadPoolExecutor as _ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..sources.vortex import FILE_SUFFIX
+
+_log = logging.getLogger(__name__)
+_WARNED: set[str] = set()
+_WARNED_LOCK = _threading.Lock()
+
+
+def warn_once(step: str) -> None:
+    """Log, once per process, that ``step`` failed, with the traceback
+    of the exception being handled. For best-effort steps the caller
+    carries on without: the warning makes the lost behaviour visible
+    without repeating on every micro-batch."""
+    with _WARNED_LOCK:
+        if step in _WARNED:
+            return
+        _WARNED.add(step)
+    _log.warning("%s failed; continuing without it", step, exc_info=True)
+
 
 # ---------------------------------------------------------------------------
 # overlapped per-batch store writes (r16, guide §2.6)
@@ -53,6 +76,10 @@ def _write_pool() -> _ThreadPoolExecutor:
             _WRITE_POOL = _ThreadPoolExecutor(
                 max_workers=2, thread_name_prefix="dvs-batch-write"
             )
+            # the process owns the pool: at exit, queued writes are
+            # cancelled instead of started (a batch whose writes never
+            # joined never committed, so its retry rewrites them)
+            atexit.register(_WRITE_POOL.shutdown, wait=False, cancel_futures=True)
         return _WRITE_POOL
 
 
@@ -81,11 +108,6 @@ class overlapped_batch_writes:
         self._futs: list = []
 
     def submit(self, fn, *args, label: str | None = None, **kwargs) -> None:
-        if os.environ.get("DVS_OVERLAP_WRITES", "1") == "0":
-            # kill switch (and the interleaved-A/B lever): run the
-            # write inline, exactly the pre-r16 sequential behavior
-            fn(*args, **kwargs)
-            return
         spark, label = self._spark, label or self._label
 
         # What pyspark.InheritableThread does, captured at submit time on
@@ -103,7 +125,7 @@ class overlapped_batch_writes:
             try:
                 props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
             except Exception:
-                props = None
+                warn_once("capturing the job properties for a batch write")
 
         def _run():
             if spark is not None:
@@ -113,7 +135,7 @@ class overlapped_batch_writes:
                         jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                             spark._jsparkSession
                         )
-                    except Exception:
+                    except Py4JError:  # Spark 3.x: no classic session class
                         jvm.org.apache.spark.sql.SparkSession.setActiveSession(
                             spark._jsparkSession
                         )
@@ -123,7 +145,7 @@ class overlapped_batch_writes:
                         # job descriptions are thread-local (guide §1.5/§2.6)
                         spark.sparkContext.setJobDescription(label)
                 except Exception:
-                    pass
+                    warn_once("propagating the session and job labels to a batch write")
             return fn(*args, **kwargs)
 
         self._futs.append(_write_pool().submit(_run))
@@ -961,6 +983,71 @@ def state_dirs(base: str, before: int) -> list[str]:
     ]
 
 
+def read_state(spark, base: str, before: int, schema=None, **options) -> DataFrame | None:
+    """The state of store ``base`` visible to batch ``before``
+    (`state_dirs`: live compaction segments + strictly-earlier batch
+    dirs), or None when nothing has landed yet. Because the listing is
+    tiered, every store can be incrementally compacted BETWEEN
+    micro-batches (`compact_dataset_incremental`) without breaking the
+    retry contract; a store that was never compacted reads exactly its
+    `batch_dirs`.
+
+    ``schema``: the store's known schema — the caller wrote it, the
+    store being earlier batches' frames. Passing it skips the
+    DataSource's bind step (a Python planning worker merging every part
+    file's footer) on each per-batch read; store reads return nullable
+    columns, so it is applied all-nullable. ``options`` go to the
+    reader (e.g. ``pushdown``)."""
+    dirs = state_dirs(base, before)
+    if not dirs:
+        return None
+    r = spark.read.format("vortex").option("paths", _json.dumps(dirs))
+    if schema is not None:
+        r = r.schema(
+            StructType([StructField(f.name, f.dataType, True) for f in schema.fields])
+        )
+    for k, v in options.items():
+        r = r.option(k, v)
+    return r.load()
+
+
+def start_available_now(stream_df: DataFrame, checkpoint: str, sink):
+    """Start ``sink(batch_df, batch_id)`` as the ``foreachBatch`` sink
+    of ``stream_df`` over everything available now (``availableNow``
+    trigger), checkpointed at ``checkpoint``; returns the
+    StreamingQuery (caller awaits). Each micro-batch's ``sink`` call is
+    one retryable unit: the checkpoint commits after it returns."""
+    return (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def land_id_ordered_batches(df: DataFrame, id_col: str, tag: str, cols, run) -> DataFrame:
+    """Body of the streaming catalog entries: chop ``df`` into three
+    id-ordered micro-batches, let ``run(batches, root)`` ingest them —
+    ``batches`` is the (batch_id, frame) pairs 1..3 in id order, and
+    ``run`` writes each batch's manifest under ``root/man`` of a scratch
+    ``root`` — then return the unioned manifests' ``cols``, landed for
+    the session (`land_session_dataset`, tag ``<tag>-manifest``).
+
+    Landing is executor-side and happens before the scratch dir
+    disappears: the caller may collect lazily after the entry returns,
+    and collecting instead would funnel the O(corpus) manifest through
+    the Spark driver."""
+    batched = df.withColumn("__b", F.ntile(3).over(Window.orderBy(id_col))).persist()
+    root = tempfile.mkdtemp(prefix=f"dvs_{tag}_")
+    try:
+        run([(i, batched.filter(F.col("__b") == i).drop("__b")) for i in (1, 2, 3)], root)
+        out = read_state(df.sparkSession, os.path.join(root, "man"), 10**9)
+        return land_session_dataset(out.select(*cols), f"{tag}-manifest")
+    finally:
+        batched.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
+
+
 # Default file-count cap for per-batch STATE artifacts (fingerprints,
 # LSH/IVF index rows, manifests, landed micro-batch raws). Without a
 # cap each write emits one part file per shuffle partition (32 here),
@@ -1011,8 +1098,6 @@ def land_session_dataset(
     coalescing 100 TB into 4 writer tasks is a serialization
     bottleneck, the inverse of the small-file problem the default
     guards against."""
-    import tempfile
-
     spark = df.sparkSession
     try:
         app_id = spark.sparkContext.applicationId

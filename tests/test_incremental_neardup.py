@@ -15,10 +15,10 @@ from duckdb_vortex_spark.catalog import load
 from duckdb_vortex_spark.operators.dedup import minhash_lsh_pairs
 from duckdb_vortex_spark.sources.vortex import register
 from duckdb_vortex_spark.streaming.incremental_neardup import (
-    _batch_dirs,
     incremental_neardup_stream,
     neardup_process_batch,
 )
+from duckdb_vortex_spark.streaming.sinks import batch_dirs as _batch_dirs
 
 from .conftest import SF_DIR
 

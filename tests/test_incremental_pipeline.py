@@ -635,14 +635,13 @@ def test_stream_restart_after_crashed_fold_under_lease(spark, tmp_path):
     corpus.unpersist()
 
 
-def test_overlapped_batch_writes_joins_and_propagates(monkeypatch):
-    """Focused r16 unit pins for `sinks.overlapped_batch_writes` (the
+def test_overlapped_batch_writes_joins_and_propagates():
+    """Focused unit pins for `sinks.overlapped_batch_writes` (the
     §2.6 write-overlap machinery): (1) every submitted write completes
     before __exit__ returns — the exactly-once precondition; (2) a
     failed write surfaces as the batch's error even when the gate body
     succeeds; (3) a gate-body error still joins in-flight writes first
-    (no write left racing a retry) and wins over write errors;
-    (4) DVS_OVERLAP_WRITES=0 degrades to inline execution."""
+    (no write left racing a retry) and wins over write errors."""
     import time as _t
 
     from duckdb_vortex_spark.streaming.sinks import overlapped_batch_writes
@@ -670,11 +669,47 @@ def test_overlapped_batch_writes_joins_and_propagates(monkeypatch):
             raise ValueError("gate")
     assert joined == ["w"]
 
-    # (4) kill switch runs inline on the calling thread
-    import threading
 
-    monkeypatch.setenv("DVS_OVERLAP_WRITES", "0")
-    tids = []
-    with overlapped_batch_writes() as bw:
-        bw.submit(lambda: tids.append(threading.get_ident()))
-    assert tids == [threading.get_ident()]
+def test_write_pool_shutdown_registered_once(monkeypatch):
+    """The shared write pool is shut down at interpreter exit, queued
+    writes cancelled: the hook is registered when the pool is created,
+    and only then."""
+    import duckdb_vortex_spark.streaming.sinks as sinks
+
+    hooks = []
+    monkeypatch.setattr(sinks, "_WRITE_POOL", None)
+    monkeypatch.setattr(sinks.atexit, "register", lambda f, **kw: hooks.append((f, kw)))
+    pool = sinks._write_pool()
+    try:
+        assert sinks._write_pool() is pool
+        assert hooks == [(pool.shutdown, {"wait": False, "cancel_futures": True})]
+    finally:
+        pool.shutdown()
+
+
+def test_write_propagation_failure_warns_once(monkeypatch, caplog):
+    """A write thread that cannot take over the session and job labels
+    still runs the write, and the lost propagation is logged as ONE
+    warning per process, not once per submit."""
+    import logging
+    from unittest import mock
+
+    from py4j.protocol import Py4JError
+
+    import duckdb_vortex_spark.streaming.sinks as sinks
+
+    monkeypatch.setattr(sinks, "_WARNED", set())
+    spark = mock.MagicMock()
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession.side_effect = Py4JError("x")
+    jvm.org.apache.spark.sql.SparkSession.setActiveSession.side_effect = RuntimeError("no JVM")
+    ran = []
+    with caplog.at_level(logging.WARNING, logger=sinks.__name__):
+        for _ in range(2):
+            with sinks.overlapped_batch_writes(spark, label="w") as bw:
+                bw.submit(ran.append, 1)
+    assert ran == [1, 1]
+    warnings = [r for r in caplog.records if r.name == sinks.__name__]
+    assert len(warnings) == 1, [r.getMessage() for r in warnings]
+    assert "propagating the session" in warnings[0].getMessage()
+    assert warnings[0].exc_info[0] is RuntimeError

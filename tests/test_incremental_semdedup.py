@@ -18,11 +18,11 @@ from duckdb_vortex_spark.operators.similarity import (
     sample_centroids,
 )
 from duckdb_vortex_spark.sources.vortex import register
-from duckdb_vortex_spark.streaming.incremental_neardup import _batch_dirs
 from duckdb_vortex_spark.streaming.incremental_semdedup import (
     incremental_semdedup_stream,
     semdedup_process_batch,
 )
+from duckdb_vortex_spark.streaming.sinks import batch_dirs as _batch_dirs
 
 from .conftest import SF_DIR
 
