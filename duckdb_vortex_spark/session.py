@@ -15,9 +15,18 @@ import threading
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Core count ``get_spark`` builds ``local[N]`` from:
+    ``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``. Spark's Python
+    planner workers inherit the environment of the process that
+    started the session, so the vortex scan planner reads the same
+    number."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
+
+
 def get_spark(app_name: str = "duckdb_vortex_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -14,9 +14,10 @@ Spark **Python DataSource** ("vortex"), per the survey's mapping:
 - A5 projection pushdown. only Spark-pruned columns are decoded
 - A6 filter pushdown .... ``pushFilters`` → zone-map row-group skip
                           (opt-in ``pushdown=true``; default scans are
-                          filter-independent — see pushFilters r8 note)
+                          filter-independent — see pushFilters)
 - A7 statistics ......... per-chunk min/max/null-count (parquet stats)
-- A8 chunked scan ....... one InputPartition per (file, row-group)
+- A8 chunked scan ....... one InputPartition per contiguous run of
+                          surviving (file, row-group) chunks, ~one per core
 - A9 type matrix ........ Arrow ↔ Spark conversion (SURVEY.md §1.2)
 
 Container format: a real ``.vortex`` binary container (rung (b) of
@@ -27,10 +28,17 @@ patching, FSST-style symbol-table / dictionary strings, validity
 bitmaps, zlib cascade, Arrow-IPC fallback for nested & decimal types.
 Not parquet: every byte of the layout is defined in that module.
 
-Scale: the scan parallelism unit is the chunk, so a 1000-executor
-cluster gets even work distribution for any file count; pushdown
-happens before any Arrow batch is materialized; reads stream
-RecordBatches (never whole files) across the Python↔JVM boundary.
+Scale: pruning works per chunk, but a scan task is a contiguous run
+of surviving chunks balanced by encoded bytes — as many tasks as
+cores, or one per 128 MiB (Spark's default ``maxPartitionBytes``) when
+that is more, never more than the chunks. Each Python task costs
+~0.25 s of dispatch against 25-40 ms to decode a lineitem chunk, so
+tasks are packed the way Spark's file sources pack splits
+(``FilePartition.getFilePartitions``) and a morsel-driven worker walks
+its split list; large scans keep task parallelism and small retry
+units. Pushdown happens before any Arrow batch is materialized;
+reads stream RecordBatches (never whole files) across the Python↔JVM
+boundary.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ import os
 import uuid
 from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
+from itertools import groupby
 from types import SimpleNamespace
 
 from pyspark.sql.datasource import (
@@ -62,6 +71,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
+from ..session import default_cpus
 from . import vortex_format as vfmt
 
 FILE_SUFFIX = ".vortex"
@@ -84,8 +94,8 @@ def _expand(path: str) -> list[str]:
         # matches from its ONE listing: objects append directly;
         # directory matches (a dataset named ds-1.vortex with data at
         # ds-1.vortex/part-0.vortex) expand to their part files exactly
-        # as the local isdir branch does (ADVICE r4 — previously these
-        # silently expanded to nothing).
+        # as the local isdir branch does (skipping this step would
+        # silently expand them to nothing).
         files: list[str] = []
         for m, is_dir in fs.glob_entries(p):
             if is_dir:
@@ -136,8 +146,8 @@ def _apply_store_options(store: dict) -> None:
     tuple ever registered: with an ever-registered set, two datasets on
     different stores in one worker process would leave the second
     store's client registered while the first dataset's next task
-    skips re-registration and silently reads through the wrong store
-    (ADVICE r4). Each task re-applies its OWN options immediately
+    skips re-registration and silently reads through the wrong store.
+    Each task re-applies its OWN options immediately
     before resolving paths, so reads always route to their dataset's
     store; ``replace=True`` marks that swap as deliberate to
     register_s3's conflict guard."""
@@ -232,12 +242,84 @@ def _partition_values(file: str) -> dict[str, str]:
     return out
 
 
-@dataclass
-class VortexChunk(InputPartition):
-    """One scan unit = one row-group (chunk) of one file (A8)."""
+@dataclass(frozen=True)
+class VortexChunk:
+    """One row-group (chunk) of one file: the pruning unit (A7). A
+    ``row_group`` of -1 is the empty-scan sentinel. ``nbytes`` is the
+    chunk's encoded size summed over all columns, the packing weight."""
 
     file: str
     row_group: int
+    nbytes: int = 0
+
+
+@dataclass
+class VortexScanTask(InputPartition):
+    """One scan partition = a contiguous run of surviving chunks, in
+    file-then-chunk order (A8)."""
+
+    chunks: list[VortexChunk]
+
+
+MAX_TASK_BYTES = 128 * 1024 * 1024  # Spark's default maxPartitionBytes
+
+
+def _file_chunks(file: str, footer) -> list[VortexChunk]:
+    return [
+        VortexChunk(file, ci, sum(cd["len"] for cd in ch["columns"].values()))
+        for ci, ch in enumerate(footer.chunks)
+    ]
+
+
+def pack_chunks(chunks: list[VortexChunk], cores: int) -> list[VortexScanTask]:
+    """Split ``chunks`` into ``min(n, max(cores, ceil(bytes / 128 MiB)))``
+    contiguous, non-empty groups balanced by ``nbytes``. A chunk goes to
+    the group its byte midpoint falls in, clamped so groups stay in
+    order, none is skipped, and enough chunks remain for every later
+    group. Contiguity keeps the row order of a plain ``collect()``."""
+    n = len(chunks)
+    if n == 0:
+        return []
+    weights = [c.nbytes for c in chunks]
+    total = sum(weights)
+    if total == 0:
+        weights, total = [1] * n, n
+    k = min(n, max(cores, -(-total // MAX_TASK_BYTES)))
+    groups: list[list[VortexChunk]] = []
+    before = 0
+    for j, (c, w) in enumerate(zip(chunks, weights)):
+        g = min(k - 1, (2 * before + w) * k // (2 * total))
+        g = max(g, k - (n - j))  # each later group still gets a chunk
+        g = min(max(g, len(groups) - 1), len(groups))  # in order, no gap
+        if g == len(groups):
+            groups.append([])
+        groups[g].append(c)
+        before += w
+    return [VortexScanTask(g) for g in groups]
+
+
+def _read_chunks(chunks: list[VortexChunk], schema: StructType, store: dict):
+    """Decode a partition's chunks in order: prune columns (A5), yield
+    Arrow RecordBatches (A9 — zero-copy into Spark), read each file's
+    footer once per run of its chunks. Row-level filtering is Spark's —
+    every filter is returned as residual (see pushFilters), and no
+    pushed-hint row prefilter runs here (see _arrow_predicate). Columns
+    a file predates (additive schema evolution) come back as typed
+    nulls, so a filter on an evolved column is correct on old files
+    too."""
+    _apply_store_options(store)  # executor-side worker process
+    cols = [f.name for f in schema.fields]
+    for file, run in groupby(chunks, key=lambda c: c.file):
+        footer = vfmt.read_footer(file)
+        present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
+        for c in run:
+            if c.row_group < 0:
+                continue  # empty-scan sentinel: no rows
+            n_rows = footer.chunks[c.row_group]["n_rows"]
+            table = vfmt.read_chunk(file, footer, c.row_group, present)
+            yield from _with_missing_columns(
+                table, schema, cols, n_rows=n_rows
+            ).to_batches()
 
 
 class VortexReader(DataSourceReader):
@@ -249,7 +331,7 @@ class VortexReader(DataSourceReader):
             raise FileNotFoundError(f"no vortex files match {self.path!r}")
         self.schema = schema
         self.pushed: list[Filter] = []
-        # r8: hint-state pruning is OPT-IN (default false). A scan with
+        # hint-state pruning is OPT-IN (default false). A scan with
         # no hint state is identical for every query, which makes any
         # relation reuse — filtered fan-outs, self-joins, an unfiltered
         # count after a filtered action — correct by construction under
@@ -281,7 +363,7 @@ class VortexReader(DataSourceReader):
         the rows crossing the Arrow→JVM boundary; row-level
         correctness never depends on reader state.
 
-        Why all-residual (r7): the Python DataSource contract treats
+        Why all-residual: the Python DataSource contract treats
         non-returned filters as fully handled, so Spark DELETES their
         Filter nodes. Combined with the upstream caveat below, two
         differently-filtered scans of the SAME relation (a decontam
@@ -290,7 +372,7 @@ class VortexReader(DataSourceReader):
         deleted returned unfiltered rows, silently. With all filters
         residual, the worst a stale scan closure can do is prune
         chunks with the OTHER branch's hints (wrong-direction
-        pruning). r8 removes that residue too: hints are opt-in.
+        pruning); making hints opt-in removes that residue too.
 
         KNOWN UPSTREAM CAVEAT (Spark 4.1 Python DataSource): the JVM
         caches the planned scan (``PythonDataSourceV2.readInfo``) in a
@@ -300,7 +382,7 @@ class VortexReader(DataSourceReader):
         filters reuses whatever scan the slot holds (builtin sources
         are unaffected).
 
-        Why hints are OPT-IN rather than auto-poisoned (r8): the
+        Why hints are OPT-IN rather than auto-poisoned: the
         obvious in-Python fix — detect a re-plan with a different
         filter set on one reader and degrade to no pruning — is
         structurally impossible. Traced under VORTEX_TRACE_FILE:
@@ -353,18 +435,29 @@ class VortexReader(DataSourceReader):
                 self.pushed.append(f)
         return filters
 
-    def partitions(self) -> Sequence[VortexChunk]:
-        self._trace("partitions")
+    def surviving_chunks(self) -> list[VortexChunk]:
+        """Every chunk that directory, zone-map and bloom pruning keep,
+        in file-then-chunk order."""
         chunks = []
         for f in self.files:
             if not self._dir_survives(f):
                 continue  # partition-directory pruning: no footer read
             footer = vfmt.read_footer(f)
-            for ci in range(len(footer.chunks)):
-                if self._chunk_survives(footer, ci):
-                    chunks.append(VortexChunk(f, ci))
+            chunks.extend(
+                c for c in _file_chunks(f, footer)
+                if self._chunk_survives(footer, c.row_group)
+            )
+        return chunks
+
+    def partitions(self) -> Sequence[VortexScanTask]:
+        chunks = self.surviving_chunks()
+        # the packing weight is a chunk's bytes over ALL columns, never
+        # the projection's, so a hint-free scan's partition list depends
+        # only on its file list (see pushFilters)
+        tasks = pack_chunks(chunks, default_cpus())
+        self._trace(f"partitions chunks={len(chunks)} tasks={len(tasks)}")
         # Empty scan still needs ≥1 partition for a valid (empty) result.
-        return chunks or [VortexChunk(self.files[0], -1)]
+        return tasks or [VortexScanTask([VortexChunk(self.files[0], -1)])]
 
     def _dir_survives(self, file: str) -> bool:
         """Hive-partition pruning: a pushed =/IN filter on a partition
@@ -461,12 +554,12 @@ class VortexReader(DataSourceReader):
 
     def _arrow_predicate(self):
         """Arrow expression form of the pushed hints.  NOT applied in
-        ``read()`` (r7): a batch-level prefilter is scan-closure state,
+        ``read()``: a batch-level prefilter is scan-closure state,
         and under the upstream single-slot readInfo caveat a stale
         closure's prefilter silently removed rows another branch of the
         same relation needed (its Filter node re-adds nothing that the
         scan never yielded). Opt-in chunk pruning keeps the 100 TB win
-        for fresh-load-per-query scans (r8: hints default OFF); the
+        for fresh-load-per-query scans (hints default OFF); the
         row-level prefilter only ever saved Arrow→JVM transfer that
         Spark's retained Filter now handles. Kept for
         diagnostics/tests."""
@@ -500,29 +593,8 @@ class VortexReader(DataSourceReader):
             expr = e if expr is None else (expr & e)
         return expr
 
-    def read(self, partition: VortexChunk):
-        """Decode one chunk: prune columns (A5; chunk-level filter
-        pruning happened in partitions()), yield Arrow RecordBatches
-        (A9 — zero-copy into Spark). Row-level filtering is Spark's —
-        every filter is returned as residual (see pushFilters).
-        Columns the file predates (additive schema evolution) come
-        back as typed nulls, so a filter on an evolved column is
-        correct on old files too."""
-        _apply_store_options(self.store)  # executor-side worker process
-        cols = [f.name for f in self.schema.fields]
-        footer = vfmt.read_footer(partition.file)
-        if partition.row_group < 0:
-            # survives-nothing scan: emit an empty batch with the schema
-            yield from _with_missing_columns(
-                footer.schema.empty_table(), self.schema, cols
-            ).to_batches(max_chunksize=1)
-            return
-        present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
-        n_rows = footer.chunks[partition.row_group]["n_rows"]
-        table = vfmt.read_chunk(partition.file, footer, partition.row_group, present)
-        table = _with_missing_columns(table, self.schema, cols, n_rows=n_rows)
-        # no pushed-hint row prefilter here — see _arrow_predicate (r7)
-        yield from table.to_batches()
+    def read(self, partition: VortexScanTask):
+        yield from _read_chunks(partition.chunks, self.schema, self.store)
 
 
 class VortexStreamReader(DataSourceStreamReader):
@@ -533,8 +605,9 @@ class VortexStreamReader(DataSourceStreamReader):
 
     Offsets are the sorted list of consumed file names — exactly-once
     across restarts because the checkpointed end offset names the
-    files already read. Each micro-batch plans one InputPartition per
-    (new file, chunk), so batch read parallelism carries over. The
+    files already read. Each micro-batch packs the new files' chunks
+    into scan tasks with the batch scan's packer and reads them with
+    its chunk reader, so batch read parallelism carries over. The
     offset grows with file count; production retention pairs this with
     periodic compaction (see streaming/sinks.py), the same trade
     Spark's file source makes with its file log."""
@@ -556,37 +629,23 @@ class VortexStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:  # noqa: N802
         return {"files": self._current_files()}
 
-    def partitions(self, start: dict, end: dict) -> Sequence[VortexChunk]:
+    def partitions(self, start: dict, end: dict) -> Sequence[VortexScanTask]:
         seen = set(start.get("files", []))
         chunks: list[VortexChunk] = []
         for f in end.get("files", []):
-            if f in seen:
-                continue
-            footer = vfmt.read_footer(f)
-            chunks.extend(VortexChunk(f, ci) for ci in range(len(footer.chunks)))
+            if f not in seen:
+                chunks.extend(_file_chunks(f, vfmt.read_footer(f)))
+        tasks = pack_chunks(chunks, default_cpus())
         # a no-new-data batch still needs one (empty) partition
-        if not chunks:
+        if not tasks:
             anchor = end.get("files") or [None]
             if anchor[0] is None:
                 return []
-            chunks = [VortexChunk(anchor[0], -1)]
-        return chunks
+            tasks = [VortexScanTask([VortexChunk(anchor[0], -1)])]
+        return tasks
 
-    def read(self, partition: VortexChunk):
-        _apply_store_options(self.store)  # executor-side worker process
-        cols = [f.name for f in self.schema.fields]
-        footer = vfmt.read_footer(partition.file)
-        if partition.row_group < 0:
-            yield from _with_missing_columns(
-                footer.schema.empty_table(), self.schema, cols
-            ).to_batches(max_chunksize=1)
-            return
-        present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
-        n_rows = footer.chunks[partition.row_group]["n_rows"]
-        table = vfmt.read_chunk(partition.file, footer, partition.row_group, present)
-        yield from _with_missing_columns(
-            table, self.schema, cols, n_rows=n_rows
-        ).to_batches()
+    def read(self, partition: VortexScanTask):
+        yield from _read_chunks(partition.chunks, self.schema, self.store)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-describing; nothing to clean up
@@ -632,8 +691,9 @@ class VortexWriter(DataSourceArrowWriter):
         def flush(tail: bool) -> None:
             # Re-chunk buffered Arrow batches into exact chunk_rows
             # chunks, independent of incoming batch boundaries — chunk
-            # size is the scan-parallelism unit (A8), so it must be
-            # stable, not an artifact of the Python↔JVM batch size.
+            # size is the pruning unit (A7) and the grain scan tasks
+            # are packed from (A8), so it must be stable, not an
+            # artifact of the Python↔JVM batch size.
             nonlocal pending, n_pending
             table = pa.Table.from_batches(pending).combine_chunks()
             full = n_pending if tail else (n_pending // self.chunk_rows) * self.chunk_rows

@@ -225,7 +225,7 @@ def _encode_alp(arr, f32: bool) -> tuple[dict, bytes] | None:
     if n == 0:
         return {"e": 0, "ref": 0, "width": 0, "n_exc": 0, "f32": f32}, b""
     finite = np.isfinite(a64)
-    # r15 perf: sampled REJECT pre-screen. Full-precision float chunks
+    # Sampled REJECT pre-screen. Full-precision float chunks
     # (embeddings — the writer's heaviest input) round-trip at no
     # exponent, and the exact search below paid 15 full-array
     # round+divide passes to learn that before falling back to flat.
@@ -240,7 +240,7 @@ def _encode_alp(arr, f32: bool) -> tuple[dict, bytes] | None:
     # because the screen only ever rejects: it never picks e or
     # writes bytes.
     #
-    # Sampling (r16, ADVICE r15): TWO CO-PRIME strides, k and k+1,
+    # Sampling: TWO CO-PRIME strides, k and k+1,
     # the second offset by k//2 — a single stride k samples one
     # residue class of any period p | k, so periodic data (e.g.
     # interleaved sensor channels) whose clean-decimal values align
@@ -394,11 +394,11 @@ def fsst_decode(buf: bytes, symbols: list[bytes]) -> bytes:
 def _cascade(meta: dict, buf: bytes) -> tuple[dict, bytes]:
     if len(buf) >= 64:
         if len(buf) > 262144:
-            # r15 perf: probe a sample before paying the full zlib
+            # Probe a sample before paying the full zlib
             # pass — packed full-precision float buffers (flat_float
             # embeddings, ~0.5 MiB per 64 k-row chunk column) are
             # incompressible and the full compress was pure waste.
-            # r16 (ADVICE r15): the probe reads head + middle + tail
+            # The probe reads head + middle + tail
             # (64 KiB total) instead of the head alone, so a
             # mixed-content buffer whose head is incompressible but
             # whose tail compresses well is not skipped. Skip only

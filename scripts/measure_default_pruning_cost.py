@@ -1,9 +1,8 @@
-"""Quantify the cost of the r8 safe-by-default scan decision
-(VERDICT r8 #4): with hints OPT-IN, a user's plain
-``spark.read.format("vortex").load(...)`` no longer prunes chunks at
-plan time — every chunk becomes a task and Spark's residual Filter
-does the row work. This script puts a NUMBER on that for the worst
-case the opt-in was designed around: a highly selective predicate
+"""Quantify the cost of the safe-by-default scan decision: with hints
+OPT-IN, a user's plain ``spark.read.format("vortex").load(...)`` does
+not prune chunks at plan time — every chunk is decoded and Spark's
+residual Filter does the row work. This script puts a NUMBER on that
+for the worst case the opt-in was designed around: a highly selective predicate
 over a large key-sorted dataset (tight non-overlapping zone maps, so
 ``pushdown=true`` refutes all but O(1) chunks).
 
@@ -12,8 +11,10 @@ time the same selective filter n times per mode in ONE session
 (fresh ``load()`` per query — the documented safe pattern for the
 opt-in), interleaved A/B/A/B so box drift hits both modes equally.
 
-Prints one JSON line: per-mode medians/min/max, chunk counts, and the
-derived default-over-pushdown ratio for SCALE.md.
+Prints one JSON line: per-mode medians/min/max, scan partitions
+planned and chunks decoded per mode (read from the planner's
+``trace_file`` event), and the derived default-over-pushdown ratio for
+SCALE.md.
 
 Usage: python scripts/measure_default_pruning_cost.py [n] [chunk_rows]
 """
@@ -75,15 +76,23 @@ def main() -> None:
         times["default"].append(run(False))
         times["pushdown"].append(run(True))
 
-    # plan-level evidence: how many chunk-partitions each mode scans
-    def n_parts(pushdown: bool) -> int:
-        r = spark.read.format("vortex")
+    # plan-level evidence: scan partitions planned and surviving chunks
+    # decoded per mode, from the planner's "partitions chunks=N tasks=K"
+    # trace event
+    def plan(pushdown: bool) -> tuple[int, int]:
+        log = os.path.join(root, "plan_events.log")
+        open(log, "w").close()
+        r = spark.read.format("vortex").option("trace_file", log)
         if pushdown:
             r = r.option("pushdown", "true")
         df = r.load(path).filter(
             (F.col("l_orderkey") >= lo) & (F.col("l_orderkey") <= hi)
         )
-        return df.select("l_orderkey").rdd.getNumPartitions()
+        parts = df.select("l_orderkey").rdd.getNumPartitions()
+        with open(log) as fh:
+            events = [ln.split() for ln in fh if ln.startswith("partitions ")]
+        chunks = int(events[-1][1].removeprefix("chunks="))
+        return parts, chunks
 
     out = {
         "sf_dir": SF_DIR,
@@ -91,9 +100,9 @@ def main() -> None:
         "chunk_rows": chunk_rows,
         "predicate": f"l_orderkey in [{lo}, {hi}]",
         "n": n,
-        "parts_default": n_parts(False),
-        "parts_pushdown": n_parts(True),
     }
+    for mode, pushdown in (("default", False), ("pushdown", True)):
+        out[f"parts_{mode}"], out[f"chunks_{mode}"] = plan(pushdown)
     for mode, ts in times.items():
         out[f"{mode}_median_s"] = round(statistics.median(ts), 3)
         out[f"{mode}_min_s"] = round(min(ts), 3)

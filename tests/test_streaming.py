@@ -243,9 +243,9 @@ def test_compact_streamed_dataset(spark, event_stream_dir, tmp_path):
 
     mx = after_df.agg(F.max("event_id")).collect()[0][0]
     r = VortexReader({"path": out}, after_df.schema)
-    n_all = len(r.partitions())
+    n_all = len(r.surviving_chunks())
     r.pushed = [GreaterThan(("event_id",), int(mx))]
-    assert len(r.partitions()) <= max(1, n_all // 2)
+    assert len(r.surviving_chunks()) <= max(1, n_all // 2)
 
 
 def test_read_vortex_as_of_batches(spark, tmp_path):

@@ -353,8 +353,7 @@ class TestStringBloom:
         def surviving(pushed):
             r = VortexReader({"path": path}, spark.read.format("vortex").load(path).schema)
             r.pushed = pushed
-            # chunk_idx -1 is the sentinel "valid empty scan" partition
-            return [p for p in r.partitions() if p.row_group >= 0]
+            return r.surviving_chunks()
 
         total = len(surviving([]))
         assert total >= 2  # at least the two constructed chunks
@@ -478,11 +477,12 @@ class TestIntBloom:
         back = spark.read.format("vortex").load(path)
         r = VortexReader({"path": path}, back.schema)
         r.pushed = [EqualTo(("id",), 1000)]  # even id inside the odd chunk's span
-        parts = r.partitions()  # bloom refutes both chunks → empty-scan sentinel
-        assert len(parts) == 1 and parts[0].row_group == -1
+        assert r.surviving_chunks() == []  # bloom refutes both chunks
+        parts = r.partitions()  # → empty-scan sentinel
+        assert len(parts) == 1 and [c.row_group for c in parts[0].chunks] == [-1]
         r2 = VortexReader({"path": path}, back.schema)
         r2.pushed = [EqualTo(("id",), 1001)]
-        parts2 = r2.partitions()
+        parts2 = r2.surviving_chunks()
         assert len(parts2) == 1 and parts2[0].row_group == 1
 
 

@@ -170,7 +170,7 @@ def test_nested_struct_field_prunes_chunks(spark, tmp_path):
     def surviving(pushed):
         r = VortexReader({"path": d}, schema)
         r.pushed = pushed
-        return len(r.partitions())
+        return len(r.surviving_chunks())
 
     total = surviving([])
     pruned = surviving([GreaterThan(("st", "a"), 9500)])
@@ -204,7 +204,7 @@ def test_nested_isnull_prune_counts_parent_nulls(spark, tmp_path):
     schema = spark.read.format("vortex").load(str(d)).schema
     r = VortexReader({"path": str(d)}, schema)
     r.pushed = [IsNull(("st", "a"))]
-    parts = r.partitions()
+    parts = r.surviving_chunks()
     assert len(parts) == 1 and parts[0].row_group == 0  # NOT pruned
 
     got = (

@@ -15,7 +15,13 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from duckdb_vortex_spark.sources.vortex import register
+from duckdb_vortex_spark.sources.vortex import (
+    MAX_TASK_BYTES,
+    VortexChunk,
+    VortexReader,
+    pack_chunks,
+    register,
+)
 
 ROW = st.tuples(
     st.integers(min_value=-(2**63), max_value=2**63 - 1),
@@ -202,3 +208,69 @@ def test_schema_evolution_random_subsets(spark, tmp_path_factory, case):
     assert _canon(back.collect()) == _canon(
         spark.createDataFrame(want, fields(len(_POOL))).collect()
     )
+
+
+# --- scan-task packing ----------------------------------------------------
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    weights=st.lists(
+        st.one_of(st.integers(0, 4096), st.integers(0, 3 * MAX_TASK_BYTES)),
+        max_size=80,
+    ),
+    per_file=st.integers(1, 9),
+    cores=st.integers(1, 64),
+)
+def test_pack_chunks_partitions_every_chunk_once_in_order(weights, per_file, cores):
+    chunks = [
+        VortexChunk(f"part-{i // per_file}.vortex", i % per_file, w)
+        for i, w in enumerate(weights)
+    ]
+    tasks = pack_chunks(chunks, cores)
+    # concatenating the tasks gives back the input: every chunk lands in
+    # exactly one task and file-then-chunk order is kept
+    assert [c for t in tasks for c in t.chunks] == chunks
+    assert all(t.chunks for t in tasks)
+    total = sum(weights)
+    want = min(len(chunks), max(cores, math.ceil(total / MAX_TASK_BYTES)))
+    assert len(tasks) == want
+    if total:  # balanced: no task exceeds its share by more than one chunk
+        for t in tasks:
+            assert sum(c.nbytes for c in t.chunks) <= total / want + max(weights)
+
+
+@pytest.mark.parametrize("cores", [1, 2, 5, 64])
+def test_reader_packs_survivors_or_plans_the_empty_sentinel(
+    tmp_path, monkeypatch, cores
+):
+    import pyarrow as pa
+    from pyspark.sql.datasource import GreaterThan
+
+    from duckdb_vortex_spark.sources import vortex, vortex_format
+
+    d = tmp_path / "packed.vortex"
+    d.mkdir()
+    for name in ("part-a.vortex", "part-b.vortex"):
+        w = vortex_format.VortexFileWriter(
+            str(d / name), pa.schema([("k", pa.int64())])
+        )
+        w.write_table(pa.table({"k": pa.array(range(30), pa.int64())}), 4)
+        w.close()
+    monkeypatch.setattr(vortex, "default_cpus", lambda: cores)
+    schema = T.StructType([T.StructField("k", T.LongType())])
+
+    r = VortexReader({"path": str(d)}, schema)
+    chunks = r.surviving_chunks()
+    assert len(chunks) == 16
+    tasks = r.partitions()
+    assert [c for t in tasks for c in t.chunks] == chunks
+    assert len(tasks) == min(16, cores)
+    rows = [v for t in tasks for b in r.read(t) for v in b.column(0).to_pylist()]
+    assert rows == list(range(30)) * 2
+
+    r.pushed = [GreaterThan(("k",), 99)]
+    assert r.surviving_chunks() == []
+    (sentinel,) = r.partitions()
+    assert sentinel.chunks == [VortexChunk(str(d / "part-a.vortex"), -1)]
+    assert list(r.read(sentinel)) == []

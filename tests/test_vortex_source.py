@@ -14,8 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duckdb_vortex_spark.session import default_cpus
 from duckdb_vortex_spark.sources.vortex import (
-    VortexChunk,
     VortexReader,
     register,
 )
@@ -68,7 +68,8 @@ def test_roundtrip_typed_matrix_quick(spark, tmp_path):
 
 def test_roundtrip_many_chunks_40k(spark, tmp_path):
     """table.test_slow parity: 40,000 rows, many batches; also A8 —
-    chunked files parallelize into one partition per row group."""
+    every row group of a chunked file is a pruning unit, and the scan
+    packs them into one partition per core."""
     df = _typed_matrix(spark, 40000)
     path = str(tmp_path / "typed40k.vortex")
     df.coalesce(1).write.format("vortex").mode("append").option("chunk_rows", 4096).save(path)
@@ -78,7 +79,8 @@ def test_roundtrip_many_chunks_40k(spark, tmp_path):
         (i + 1) * 10 for i in range(40000)
     )
     reader = VortexReader({"path": path}, back.schema)
-    assert len(reader.partitions()) == 40000 // 4096 + 1
+    assert len(reader.surviving_chunks()) == 40000 // 4096 + 1
+    assert len(reader.partitions()) == min(40000 // 4096 + 1, default_cpus())
 
 
 def test_roundtrip_nulls(spark, tmp_path):
@@ -127,7 +129,7 @@ def test_timestamp_filter_pushdown(spark, tmp_path):
     from pyspark.sql.datasource import GreaterThan
 
     reader.pushed = [GreaterThan(("ts",), datetime.datetime(2025, 1, 1, 0, 0, 50))]
-    survived = reader.partitions()
+    survived = reader.surviving_chunks()
     assert len(survived) == 5  # 5 of 10 chunks pruned
 
 
@@ -205,7 +207,7 @@ def test_sorted_write_tightens_zone_maps(spark, tmp_path):
     def surviving(path):
         r = VortexReader({"path": path}, spark.read.format("vortex").load(path).schema)
         r.pushed = pushed
-        return len(r.partitions())
+        return len(r.surviving_chunks())
 
     n_unsorted, n_sorted = surviving(unsorted_path), surviving(sorted_path)
     assert n_sorted <= n_unsorted // 4, (n_sorted, n_unsorted)
@@ -317,19 +319,19 @@ def test_partitioned_write_layout_and_dir_pruning(spark, tmp_path):
     )
 
     # pruning: with the equality pushed, only the matching dir's files
-    # become scan partitions
+    # contribute chunks to the scan
     from pyspark.sql.datasource import EqualTo, In
 
     reader = VortexReader({"path": path}, back.schema)
-    n_all = len(reader.partitions())
+    n_all = len(reader.surviving_chunks())
     reader.pushed = [EqualTo(("event_type",), pick)]
-    pruned = reader.partitions()
+    pruned = reader.surviving_chunks()
     assert 0 < len(pruned) < n_all
     assert all(f"event_type={pick}" in c.file for c in pruned)
 
     reader2 = VortexReader({"path": path}, back.schema)
     reader2.pushed = [In(("event_type",), (types[0], types[1]))]
-    pruned2 = reader2.partitions()
+    pruned2 = reader2.surviving_chunks()
     assert {d for c in pruned2 for d in c.file.split(os.sep) if d.startswith("event_type=")} == {
         f"event_type={types[0]}", f"event_type={types[1]}"
     }
@@ -379,6 +381,40 @@ def test_schema_evolution_additive(spark, tmp_path):
     spark.createDataFrame([("s",)], "x string").write.format("vortex").mode("append").save(bad)
     with pytest.raises(Exception, match="type conflict"):
         spark.read.format("vortex").load(bad).collect()
+
+
+def test_packed_partition_spans_evolved_files_in_order(spark, tmp_path):
+    """A scan task packed across an old file and a file that added a
+    column reads each file's chunks with that file's footer, fills the
+    missing column with nulls, and keeps row order: ``collect()`` equals
+    a parquet twin of the same rows row for row."""
+    from duckdb_vortex_spark.sources import vortex_format as vfmt
+    from duckdb_vortex_spark.sources.vortex import _expand
+
+    path = str(tmp_path / "evolving_packed.vortex")
+    # more new-file chunks than cores, so the first task must take the
+    # old file's tiny chunks and the head of the new file
+    n_new = 4 * (default_cpus() + 1)
+    spark.range(0, 8).selectExpr("id", "concat('old', id) AS name").coalesce(1) \
+        .write.format("vortex").option("chunk_rows", 4).mode("append").save(path)
+    spark.range(100, 100 + 50 * n_new).selectExpr(
+        "id", "concat('new', id) AS name", "CAST(id AS DOUBLE) / 2 AS score"
+    ).coalesce(1).write.format("vortex").option("chunk_rows", 50).mode("append").save(path)
+
+    back = spark.read.format("vortex").load(path)
+    tasks = VortexReader({"path": path}, back.schema).partitions()
+    files = [{c.file for c in t.chunks} for t in tasks]
+    assert any(len(fs) == 2 for fs in files), files  # one task spans both files
+
+    old_first = "score" not in vfmt.read_footer(_expand(path)[0]).schema.names
+    old = [(i, f"old{i}", None) for i in range(8)]
+    new = [(i, f"new{i}", i * 0.5) for i in range(100, 100 + 50 * n_new)]
+    twin = str(tmp_path / "twin_parquet")
+    spark.createDataFrame(
+        old + new if old_first else new + old, "id bigint, name string, score double"
+    ).coalesce(1).write.parquet(twin)
+    want = [tuple(r) for r in spark.read.parquet(twin).collect()]
+    assert [tuple(r) for r in back.collect()] == want
 
 
 def test_dataset_stats_footer_only(spark, tmp_path):
@@ -588,7 +624,7 @@ def test_zorder_write_prunes_on_second_dimension(spark, tmp_path):
     def surviving(path):
         r = VortexReader({"path": path}, schema)
         r.pushed = list(pushed)
-        return len(r.partitions())
+        return len(r.surviving_chunks())
 
     n_sorted, n_zorder = surviving(p_sorted), surviving(p_zorder)
     assert n_zorder < n_sorted, (n_zorder, n_sorted)
@@ -662,14 +698,15 @@ def test_filtered_self_join_keeps_spark_filters(spark, tmp_path):
 
 
 def test_all_residual_pushdown_still_prunes_end_to_end(spark, tmp_path):
-    """r7 contract: pushFilters returns EVERY filter (Spark keeps its
-    Filter nodes) yet the recorded hints must still reach partitions()
-    through the real planner — a point filter on a sorted 40-chunk
-    dataset prunes to one scan partition AND returns exact rows. This
+    """All-residual contract: pushFilters returns EVERY filter (Spark
+    keeps its Filter nodes) yet the recorded hints must still reach
+    partitions() through the real planner — a point filter on a sorted
+    40-chunk dataset plans one surviving chunk (read from the planner's
+    trace event) in one scan partition AND returns exact rows. This
     guards against a regression where declining all filters stops the
     pushdown path from running (which would silently disable zone-map
-    pruning everywhere). r8: hints are opt-in (`pushdown=true`), the
-    safe mode for this fresh-load-per-query shape."""
+    pruning everywhere). Hints are opt-in (`pushdown=true`), the safe
+    mode for this fresh-load-per-query shape."""
     from duckdb_vortex_spark.sources.vortex import register, write_sorted
 
     register(spark)
@@ -678,11 +715,19 @@ def test_all_residual_pushdown_still_prunes_end_to_end(spark, tmp_path):
         (F.col("id") % 200).alias("a"), F.col("id").alias("payload")
     )
     write_sorted(df, p, sort_cols=["a"], chunk_rows=1000)
+    tf = tmp_path / "plan_events.log"
+    tf.write_text("")
     q = (
         spark.read.format("vortex")
         .option("pushdown", "true")
+        .option("trace_file", str(tf))
         .load(p)
         .filter(F.col("a") == 7)
     )
     assert q.count() == 200  # row-level exactness (Spark's Filter)
-    assert q.rdd.getNumPartitions() == 1  # chunk-level pruning (hints)
+    planned = [
+        ln.split()[1] for ln in tf.read_text().splitlines()
+        if ln.startswith("partitions ")
+    ]
+    assert planned and set(planned) == {"chunks=1"}, planned  # chunk-level pruning (hints)
+    assert q.rdd.getNumPartitions() == 1
